@@ -20,114 +20,97 @@ import graft.operators.Similarity
   * }}}
   *
   * (Per-session registration for embedded callers stays available via
-  * `SqlFunctions.register`.)
+  * `SqlFunctions.register`; both install [[GraftExtensions.functions]].)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("fvec_dot"),
-      new ExpressionInfo(classOf[FloatDotProduct].getName, "fvec_dot"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2, "fvec_dot(arrayFloat, arrayFloat)")
-        FloatDotProduct(exprs(0), exprs(1))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("sign_band_keys"),
-      new ExpressionInfo(classOf[SignBandKeys].getName, "sign_band_keys"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 5,
-          "sign_band_keys(vec, bands, planesPerBand, dim, seed)")
-        def intArg(e: Expression, what: String): Int = {
-          require(e.foldable, s"$what must be a literal")
-          e.eval(null) match {
-            case i: Int  => i
-            case l: Long => require(l.isValidInt, s"$what out of range: $l"); l.toInt
-            case other   => throw new IllegalArgumentException(
-              s"$what must be an integer literal, got $other")
-          }
-        }
-        val bands = intArg(exprs(1), "bands")
-        val r = intArg(exprs(2), "planesPerBand")
-        val dim = intArg(exprs(3), "dim")
-        require(bands >= 1 && dim >= 1, "bands and dim must be >= 1")
-        require(r >= 1 && r <= 64, "planesPerBand must be in [1, 64] (long key bits)")
-        require(exprs(4).foldable, "seed must be a literal")
-        val seed = exprs(4).eval(null) match {
-          case i: Int  => i.toLong
-          case l: Long => l
-          case other   => throw new IllegalArgumentException(
-            s"seed must be an integer literal, got $other")
-        }
-        SignBandKeys(exprs(0), Similarity.flatPlanes(bands, r, dim, seed),
-          bands, r, dim)
-      }))
-    // The per-document sketch kernels (r7): SQL users get the same
-    // zero-shuffle shingle/SimHash/repetition sketches the Scala
-    // operators compute — e.g. the whole d1/d4-style dedup signature
-    // pass is a SELECT.
-    def boolArg(e: Expression, what: String): Boolean = {
-      require(e.foldable, s"$what must be a literal")
-      e.eval(null) match {
-        case b: Boolean => b
-        case other => throw new IllegalArgumentException(
-          s"$what must be a boolean literal, got $other")
-      }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.functions.foreach { case (name, cls, build) =>
+      ext.injectFunction(
+        (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
     }
-    def intLit(e: Expression, what: String): Int = {
-      require(e.foldable, s"$what must be a literal")
-      e.eval(null) match {
-        case i: Int  => i
-        case l: Long => require(l.isValidInt, s"$what out of range: $l"); l.toInt
-        case other   => throw new IllegalArgumentException(
-          s"$what must be an integer literal, got $other")
-      }
-    }
-    ext.injectFunction((
-      FunctionIdentifier("shingle_keys"),
-      new ExpressionInfo(classOf[ShingleKeysExpr].getName, "shingle_keys"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2 || exprs.length == 3,
-          "shingle_keys(tokensArray, n[, portable])")
-        val n = intLit(exprs(1), "n")
-        require(n >= 1, "n must be >= 1")
-        ShingleKeysExpr(exprs(0), n,
-          if (exprs.length == 3) boolArg(exprs(2), "portable") else false)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64Expr].getName, "simhash64"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1 || exprs.length == 2,
-          "simhash64(tokensArray[, portable])")
-        SimHash64Expr(exprs(0),
-          if (exprs.length == 2) boolArg(exprs(1), "portable") else false)
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("gram_repetition"),
-      new ExpressionInfo(classOf[GramRepetitionExpr].getName, "gram_repetition"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 1, "gram_repetition(tokensArray)")
-        GramRepetitionExpr(exprs(0))
-      }))
-    // Spark ships Bloom-filter build/probe expressions for its runtime
-    // join filters but does not register them as SQL functions; surface
-    // them so SQL callers can run the Bloom-prefilter decontamination
-    // shape (Decontamination.bloomDecontaminate) end to end in SQL.
-    ext.injectFunction((
-      FunctionIdentifier("bloom_filter_agg"),
-      new ExpressionInfo(classOf[BloomFilterAggregate].getName, "bloom_filter_agg"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 3,
-          "bloom_filter_agg(hashLong, estimatedItems, numBits)")
-        new BloomFilterAggregate(exprs(0), exprs(1), exprs(2))
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("might_contain"),
-      new ExpressionInfo(classOf[BloomFilterMightContain].getName, "might_contain"),
-      (exprs: Seq[Expression]) => {
-        require(exprs.length == 2, "might_contain(bloomFilterBinary, hashLong)")
-        BloomFilterMightContain(exprs(0), exprs(1))
-      }))
+}
+
+object GraftExtensions {
+
+  /** The native SQL functions — (name, expression class, builder) — that
+    * both registration paths install, so embedded and cluster sessions
+    * resolve identical SQL names with identical argument checks.
+    *
+    * The per-document sketch kernels give SQL users the same zero-shuffle
+    * shingle/SimHash/repetition sketches the Scala operators compute —
+    * e.g. the whole d1/d4-style dedup signature pass is a SELECT. Spark
+    * ships Bloom-filter build/probe expressions for its runtime join
+    * filters but does not register them as SQL functions; surfacing them
+    * lets SQL callers run the Bloom-prefilter decontamination shape
+    * (Decontamination.bloomDecontaminate) end to end in SQL.
+    */
+  val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
+    native("fvec_dot", classOf[FloatDotProduct],
+        "fvec_dot(arrayFloat, arrayFloat)", 2) { e =>
+      FloatDotProduct(e(0), e(1))
+    },
+    native("sign_band_keys", classOf[SignBandKeys],
+        "sign_band_keys(vec, bands, planesPerBand, dim, seed)", 5) { e =>
+      val bands = intLit(e(1), "bands")
+      val r = intLit(e(2), "planesPerBand")
+      val dim = intLit(e(3), "dim")
+      require(bands >= 1 && dim >= 1, "bands and dim must be >= 1")
+      require(r >= 1 && r <= 64, "planesPerBand must be in [1, 64] (long key bits)")
+      SignBandKeys(e(0), Similarity.flatPlanes(bands, r, dim, longLit(e(4), "seed")),
+        bands, r, dim)
+    },
+    native("shingle_keys", classOf[ShingleKeysExpr],
+        "shingle_keys(tokensArray, n[, portable])", 2, 3) { e =>
+      val n = intLit(e(1), "n")
+      require(n >= 1, "n must be >= 1")
+      ShingleKeysExpr(e(0), n, e.length == 3 && boolLit(e(2), "portable"))
+    },
+    native("simhash64", classOf[SimHash64Expr],
+        "simhash64(tokensArray[, portable])", 1, 2) { e =>
+      SimHash64Expr(e(0), e.length == 2 && boolLit(e(1), "portable"))
+    },
+    native("gram_repetition", classOf[GramRepetitionExpr],
+        "gram_repetition(tokensArray)", 1) { e =>
+      GramRepetitionExpr(e(0))
+    },
+    native("bloom_filter_agg", classOf[BloomFilterAggregate],
+        "bloom_filter_agg(hashLong, estimatedItems, numBits)", 3) { e =>
+      new BloomFilterAggregate(e(0), e(1), e(2))
+    },
+    native("might_contain", classOf[BloomFilterMightContain],
+        "might_contain(bloomFilterBinary, hashLong)", 2) { e =>
+      BloomFilterMightContain(e(0), e(1))
+    })
+
+  private def native(name: String, cls: Class[_], usage: String, arities: Int*)(
+      build: Seq[Expression] => Expression) =
+    (name, cls, (e: Seq[Expression]) => {
+      require(arities.contains(e.length), usage)
+      build(e)
+    })
+
+  private def literal(e: Expression, what: String): Any = {
+    require(e.foldable, s"$what must be a literal")
+    e.eval(null)
+  }
+
+  private def longLit(e: Expression, what: String): Long = literal(e, what) match {
+    case i: Int  => i.toLong
+    case l: Long => l
+    case other   => throw new IllegalArgumentException(
+      s"$what must be an integer literal, got $other")
+  }
+
+  private def intLit(e: Expression, what: String): Int = {
+    val l = longLit(e, what)
+    require(l.isValidInt, s"$what out of range: $l")
+    l.toInt
+  }
+
+  private def boolLit(e: Expression, what: String): Boolean = literal(e, what) match {
+    case b: Boolean => b
+    case other => throw new IllegalArgumentException(
+      s"$what must be a boolean literal, got $other")
   }
 }

@@ -3,13 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.graft.ColumnBridge
 
-import graft.functions.FloatDotProduct
-import graft.vcf.VcfFunctions
+import graft.vcf.{VcfFunctions, VcfPipeline}
 
 /** SQL-surface registration (§3.2 parity: the reference drives several
   * stages through HiveQL strings — our engine exposes the same operations
-  * to `spark.sql` callers). Pure functions register as UDFs; the vector
-  * dot product registers as its native codegen expression.
+  * to `spark.sql` callers). Pure functions register as UDFs; `cohort_freq`
+  * and the [[GraftExtensions.functions]] table register as native
+  * expressions.
   */
 object SqlFunctions {
 
@@ -21,59 +21,21 @@ object SqlFunctions {
     spark.udf.register("chrom_to_int", (s: String) => VcfFunctions.chromToInt(s))
     spark.udf.register("ad_alt_fraction",
       (ad: String, gt: String) => VcfFunctions.adAltFraction(ad, gt))
-    // U1: cohort allele frequency over collected per-sample maps
-    spark.udf.register("cohort_freq", (samples: Seq[Map[String, String]]) => {
-      if (samples == null || samples.isEmpty) 0.0f
-      else {
-        val alt = samples.iterator.map(_.getOrElse("gt", "") match {
-          case "1/1" => 2
-          case "0/1" => 1
-          case _     => 0
-        }).sum
-        (math.floor(alt.toDouble / (2 * samples.size) * 1e6) / 1e6).toFloat
-      }
+    // U1: cohort allele frequency over collected per-sample maps — the
+    // pipeline's own freq expression; the cast coerces an untyped NULL or
+    // array() argument like a UDF parameter would
+    ColumnBridge.registerExpression(spark, "cohort_freq", exprs => {
+      require(exprs.length == 1, "cohort_freq(samplesArray)")
+      ColumnBridge.sqlExpression(VcfPipeline.freqColumn(
+        ColumnBridge.column(exprs(0)).cast("array<map<string,string>>")))
     })
     // U2: merge population maps, recoding empty values to "0"
     spark.udf.register("pop_normalize",
       (maps: Seq[Map[String, String]]) => VcfFunctions.popNormalize(maps))
     // native expressions — stay inside whole-stage codegen from SQL too;
-    // same surface as GraftExtensions so the embedded and cluster
-    // deployment modes resolve the identical SQL names
-    ColumnBridge.registerExpression(spark, "fvec_dot",
-      exprs => FloatDotProduct(exprs(0), exprs(1)))
-    def intLit(e: org.apache.spark.sql.catalyst.expressions.Expression,
-        what: String): Int = {
-      require(e.foldable, s"$what must be a literal")
-      e.eval(null) match {
-        case i: Int  => i
-        case l: Long => require(l.isValidInt, s"$what out of range: $l"); l.toInt
-        case other   => throw new IllegalArgumentException(
-          s"$what must be an integer literal, got $other")
-      }
+    // the same table GraftExtensions installs
+    GraftExtensions.functions.foreach { case (name, _, build) =>
+      ColumnBridge.registerExpression(spark, name, build)
     }
-    def boolLit(e: org.apache.spark.sql.catalyst.expressions.Expression,
-        what: String): Boolean = {
-      require(e.foldable, s"$what must be a literal")
-      e.eval(null) match {
-        case b: Boolean => b
-        case other => throw new IllegalArgumentException(
-          s"$what must be a boolean literal, got $other")
-      }
-    }
-    ColumnBridge.registerExpression(spark, "simhash64", exprs =>
-      graft.functions.SimHash64Expr(exprs(0),
-        if (exprs.length >= 2) boolLit(exprs(1), "portable") else false))
-    ColumnBridge.registerExpression(spark, "shingle_keys", exprs => {
-      require(exprs.length == 2 || exprs.length == 3,
-        "shingle_keys(tokensArray, n[, portable])")
-      val n = intLit(exprs(1), "n")
-      require(n >= 1, "n must be >= 1")
-      graft.functions.ShingleKeysExpr(exprs(0), n,
-        if (exprs.length == 3) boolLit(exprs(2), "portable") else false)
-    })
-    ColumnBridge.registerExpression(spark, "gram_repetition", exprs => {
-      require(exprs.length == 1, "gram_repetition(tokensArray)")
-      graft.functions.GramRepetitionExpr(exprs(0))
-    })
   }
 }

@@ -196,14 +196,12 @@ object IntervalJoin {
     * dataset-overlap audit (e.g. two redaction passes, two extractor
     * versions).
     *
-    * Both sides first collapse to disjoint merged runs
-    * ([[IntervalDepth.coalesce]] — the distributed sweep), so each
-    * covered base is counted once per side; the intersection is the
-    * j2 bin-key equi-join over the MERGED runs (disjoint × disjoint:
-    * each overlapping pair contributes its exact clipped length once —
-    * owner-bin attribution makes the join exactly-once, no distinct
-    * exchange), and the union is
-    * |A| + |B| − |A∩B| by inclusion-exclusion — never a second sweep.
+    * Both tracks run through ONE tagged-delta sweep
+    * ([[IntervalDepth.twoTrackCoveredBp]]: one range exchange, no
+    * merged-run materialization, no bin fan-out or bin join): a_bp/b_bp
+    * sum segment lengths at positive per-track depth, so each covered
+    * base counts once per side; inter_bp sums those at both-positive
+    * depth; the union is |A| + |B| − |A∩B| by inclusion-exclusion.
     *
     * Exact end-to-end: base-pair counts are integer sums; jaccard
     * lands on the 1e-6 lattice via round-half-up (2a + b) div 2b.
@@ -216,20 +214,7 @@ object IntervalJoin {
   def intervalJaccard(
       a: DataFrame, b: DataFrame,
       aChrom: String, aStartCol: String, aEndCol: String,
-      bChrom: String, bStartCol: String, bEndCol: String,
-      binWidth: Long = 1024L): DataFrame = {
-    // binWidth is retained for signature compatibility: the r14 shape
-    // runs both tracks through ONE tagged-delta sweep
-    // ([[IntervalDepth.twoTrackCoveredBp]]) — one range exchange, no
-    // merged-run materialization per side, no bin fan-out, no bin join —
-    // instead of two [[IntervalDepth.coalesce]] sweeps (2 range
-    // exchanges + 2 boundary checkpoints + 2 rank regroups) plus the
-    // owner-bin intersection join. Per-position counts are identical by
-    // construction: a_bp/b_bp sum segment lengths at positive per-track
-    // depth (= merged-run lengths), inter_bp at both-positive (= the
-    // clipped overlap sum over disjoint runs) — all exact longs, and
-    // the union/jaccard lattice algebra below is unchanged.
-    require(binWidth > 0, s"binWidth must be positive (got $binWidth)")
+      bChrom: String, bStartCol: String, bEndCol: String): DataFrame =
     IntervalDepth.twoTrackCoveredBp(
         a, aChrom, aStartCol, aEndCol,
         b, bChrom, bStartCol, bEndCol,
@@ -239,7 +224,6 @@ object IntervalJoin {
       .withColumn("jaccard_e6",
         when(col("union_bp") > 0,
           expr("(2 * inter_bp * 1000000 + union_bp) div (2 * union_bp)")))
-  }
 
   /** Interval clustering — `bedtools cluster -d maxGap`: assign every
     * interval the id of its gap-closed island (two intervals share a

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.vcf.{VcfParser, Variant}
+import graft.vcf.{VcfFunctions, VcfPipeline}
 
 /** Streaming gVCF ingest (reference S9, `StreamGenomicsLoader.scala`):
   * the DStream `textFileStream` + per-batch driver-side counting + the
@@ -15,29 +15,20 @@ import graft.vcf.{VcfParser, Variant}
   */
 object GvcfStream {
 
-  /** Parse a micro-batched text stream of gVCF lines into typed variants.
-    * Sample id is derived from the source filename; chromosome from its
-    * `.chrN.` segment (falls back to 0).
+  /** Parse a micro-batched text stream of gVCF lines into typed variants
+    * with the batch parser ([[VcfPipeline.parseText]]), ungated. The
+    * chromosome comes from the file name's `.chrN.` segment (0 when it
+    * has none).
     */
-  def parse(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    spark.readStream
-      .option("maxFilesPerTrigger", "100")
-      .text(dir)
-      .select(col("value"), input_file_name().as("file"))
-      .as[(String, String)]
-      .flatMap { case (line, file) =>
-        val name = file.split("/").last
-        val sampleId = name.split("\\.").head
-        val chrom = name.split("\\.").iterator
-          .find(_.startsWith("chr"))
-          .flatMap(s => scala.util.Try(
-            graft.vcf.VcfFunctions.chromToInt(s)).toOption)
-          .getOrElse(0)
-        VcfParser.parseLine(line, sampleId, chrom)
-      }
-      .toDF()
-  }
+  def parse(spark: SparkSession, dir: String): DataFrame =
+    VcfPipeline.parseText(
+      spark.readStream.option("maxFilesPerTrigger", "100").text(dir),
+      chromOfFile).toDF()
+
+  private def chromOfFile(name: String): Int =
+    name.split("\\.").iterator.find(_.startsWith("chr"))
+      .flatMap(s => scala.util.Try(VcfFunctions.chromToInt(s)).toOption)
+      .getOrElse(0)
 
   /** Run the ingest: 60 s micro-batches (reference batch interval) into
     * band-partitioned parquet. Exactly-once: `foreachBatch` is
@@ -63,7 +54,7 @@ object GvcfStream {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
           batch
-            .withColumn("band", (col("pos") / 30000000L).cast("int"))
+            .withColumn("band", VcfPipeline.band(col("pos")))
             .withColumn("batch", lit(batchId))
             .write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")

@@ -28,18 +28,28 @@ object VcfPipeline {
   val GqMin = 19 // quality gates per reference (`steps/toRange.scala:33-34`)
   val DpMin = 7
 
+  /** Genomic band width of the `chrom=C/band=B` layout (30 Mbp). */
+  val BandWidth = 30000000L
+
   /** S1/S2: read gVCF text (gzip handled by codec), drop headers, parse to
-    * typed variants. `input_file_name()` supplies the sample id (replacing
-    * the reference's filename/`toDebugString` hacks).
+    * typed variants. Every file holds chromosome `chrom`.
     */
-  def ingest(spark: SparkSession, paths: Seq[String], chrom: Int): Dataset[Variant] = {
-    import spark.implicits._
-    spark.read.textFile(paths: _*)
-      .select(col("value"), input_file_name().as("file"))
+  def ingest(spark: SparkSession, paths: Seq[String], chrom: Int): Dataset[Variant] =
+    parseText(spark.read.text(paths: _*), _ => chrom)
+
+  /** The gVCF text → typed rows step shared by batch [[ingest]] and the
+    * streaming loader: `input_file_name()` supplies each line's file
+    * (replacing the reference's filename/`toDebugString` hacks), whose
+    * name up to the first `.` is the sample id and from which `chromOf`
+    * derives the chromosome. No quality gate: callers gate or not.
+    */
+  def parseText(text: DataFrame, chromOf: String => Int): Dataset[Variant] = {
+    import text.sparkSession.implicits._
+    text.select(col("value"), input_file_name().as("file"))
       .as[(String, String)]
       .flatMap { case (line, file) =>
-        val sampleId = file.split("/").last.split("\\.").head
-        VcfParser.parseLine(line, sampleId, chrom)
+        val name = file.split("/").last
+        VcfParser.parseLine(line, name.split("\\.").head, chromOf(name))
       }
   }
 
@@ -190,8 +200,9 @@ object VcfPipeline {
 
   /** U1: cohort allele frequency over the collected sample maps — sum of
     * alt-allele digits / (2 × samples), floor-truncated to float like the
-    * reference's `freq` UDF (`steps/toVariant.scala:28-30`). Higher-order
-    * functions, no UDF.
+    * reference's `freq` UDF (`steps/toVariant.scala:28-30`); 0 for a null
+    * or empty array. Higher-order functions, no UDF; the `cohort_freq` SQL
+    * function is this expression.
     */
   def freqColumn(samples: Column): Column = {
     val altCount = aggregate(samples, lit(0),
@@ -199,24 +210,32 @@ object VcfPipeline {
         when(element_at(s, "gt") === "1/1", 2)
           .when(element_at(s, "gt") === "0/1", 1)
           .otherwise(0))
-    (floor(altCount.cast("double") / (size(samples) * 2) * 1e6) / 1e6).cast("float")
+    when(size(samples) > 0,
+      (floor(altCount.cast("double") / (size(samples) * 2) * 1e6) / 1e6).cast("float"))
+      .otherwise(lit(0.0f))
   }
 
-  /** J3 + U1: final nested per-variant document. */
-  def variants(parsed: DataFrame, binWidth: Double = 1e6): DataFrame = {
-    val samples = sampleGroups(parsed, binWidth)
-    val effects = effectGroups(parsed)
+  /** J3 + U1: nested per-variant documents — effects ⟕ samples + freq. */
+  def joinDocuments(effects: DataFrame, samples: DataFrame): DataFrame =
     effects.join(samples, Seq("chrom", "pos", "ref", "alt"), "left")
       .withColumn("freq", freqColumn(col("samples")))
-  }
+
+  /** [[joinDocuments]] over the group stages of `parsed`. */
+  def variants(parsed: DataFrame, binWidth: Double = 1e6): DataFrame =
+    joinDocuments(effectGroups(parsed), sampleGroups(parsed, binWidth))
+
+  /** Band index of a position: the `band` partition key of every
+    * (chrom, band) table, batch and stream alike.
+    */
+  def band(pos: Column): Column = (pos / BandWidth).cast("int")
 
   /** S4: partitioned parquet sink — genomic band as a first-class derived
     * column, `partitionBy` instead of hand-built paths (U5: the custom
     * `BinPartitioner` becomes `repartitionByRange` on the derived key, so
     * rows land clustered and each partition directory gets few files).
     */
-  def writePartitioned(df: DataFrame, dest: String, bandWidth: Long = 30000000L): Unit =
-    df.withColumn("band", (col("pos") / bandWidth).cast("int") * bandWidth.toInt)
+  def writePartitioned(df: DataFrame, dest: String): Unit =
+    df.withColumn("band", band(col("pos")))
       .repartitionByRange(col("chrom"), col("band"), col("pos"))
       .write.mode("overwrite").partitionBy("chrom", "band").parquet(dest)
 }

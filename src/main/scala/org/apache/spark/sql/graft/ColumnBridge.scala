@@ -2,7 +2,7 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionUtils}
 
 /** Bridge into the `private[sql]` Column <-> catalyst Expression
   * converters (Spark 4 moved them behind `org.apache.spark.sql.classic`).
@@ -14,6 +14,12 @@ import org.apache.spark.sql.classic.ExpressionUtils
 object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
+  /** [[expression]] converted all the way down, lambdas included: a SQL
+    * function builder's result skips the Dataset API's conversion, so a
+    * lazily wrapped Column tree would reach codegen unresolved.
+    */
+  def sqlExpression(c: Column): Expression = ColumnNodeToExpressionConverter(c.node)
 
   /** Register a native expression under `name` for the SQL surface
     * (`SELECT name(...)`) of this session.

@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SparkSession
 
 /** The extension class is the cluster deployment path
   * (`--conf spark.sql.extensions=graft.GraftExtensions`): a session built
@@ -11,15 +10,7 @@ import org.apache.spark.sql.SparkSession
 class GraftExtensionsSpec extends AnyFunSuite {
 
   test("sessions built with the extension resolve native expressions from SQL") {
-    val base = TestSpark.spark // ensure the shared context exists
-    // A new SparkSession over the same context, with extensions applied at
-    // build time (the same code path --conf spark.sql.extensions takes).
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val withExt = SparkSession.builder()
-        .withExtensions(new GraftExtensions())
-        .getOrCreate()
+    TestSpark.withExtensions { withExt =>
       val r = withExt.sql(
         """SELECT fvec_dot(array(cast(1.0 as float), cast(2.0 as float)),
           |               array(cast(3.0 as float), cast(0.5 as float))) AS d,
@@ -68,9 +59,6 @@ class GraftExtensionsSpec extends AnyFunSuite {
       assert(gr.getAs[Long]("n_bigram") == 4L)
       assert(gr.getAs[Long]("dup_trigram") == 2L)
       assert(gr.getAs[Long]("n_trigram") == 3L)
-    } finally {
-      SparkSession.setActiveSession(base)
-      SparkSession.setDefaultSession(base)
     }
   }
 }

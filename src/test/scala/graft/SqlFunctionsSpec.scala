@@ -27,6 +27,28 @@ class SqlFunctionsSpec extends AnyFunSuite {
       """SELECT cohort_freq(array(map('gt','0/1'), map('gt','0/0'))) AS f"""
     ).collect().head
     assert(r.getAs[Float]("f") == 0.25f)
+    // null or empty input: 0, the contract of the pipeline's freq rule
+    val z = spark.sql(
+      """SELECT cohort_freq(NULL) AS n, cohort_freq(array()) AS e,
+        |  cohort_freq(cast(NULL AS array<map<string,string>>)) AS tn""".stripMargin
+    ).collect().head
+    assert(z.getAs[Float]("n") == 0f && z.getAs[Float]("e") == 0f && z.getAs[Float]("tn") == 0f)
+  }
+
+  test("embedded registration and the session extension install the same native functions") {
+    val names = GraftExtensions.functions.map(_._1)
+    assert(names.toSet == Set("fvec_dot", "sign_band_keys", "shingle_keys", "simhash64",
+      "gram_repetition", "bloom_filter_agg", "might_contain"))
+    TestSpark.withExtensions { withExt =>
+      for (s <- Seq(spark, withExt)) {
+        names.foreach(n => assert(s.catalog.functionExists(n), s"$n missing"))
+        // one arity rule on both paths: simhash64 takes 1 or 2 arguments
+        val err = intercept[Exception] {
+          s.sql("SELECT simhash64(split('a b', ' '), true, 1)").collect()
+        }
+        assert(err.getMessage.contains("simhash64(tokensArray[, portable])"), err.getMessage)
+      }
+    }
   }
 
   test("fvec_dot native expression callable from SQL") {

@@ -10,9 +10,9 @@ import graft.TestSpark
 /** The [[CohortGoldenSpec]] contract at realistic density: ~1M variant
   * sites × 3 samples (≈3M parsed rows — the scale band of BASELINE.md's
   * real-cohort cardinalities, reference `gzToParquetSpec.scala:55-113`),
-  * positions spanning ~100 Mbp so the prod `bandWidth = 30M` layout
-  * actually produces multiple bands, and the interval join runs against
-  * multi-band coverage blocks.
+  * positions spanning ~100 Mbp so the prod `VcfPipeline.BandWidth`
+  * (30 Mbp) layout actually produces multiple bands, and the interval
+  * join runs against multi-band coverage blocks.
   *
   * Every expected number is derived by an independent plain-Scala model
   * built from pure hash functions (no stored per-site state), so the
@@ -154,11 +154,10 @@ class CohortGoldenScaleSpec extends AnyFunSuite {
       assert(gotFreq(p) == f, s"freq mismatch at pos $p")
     }
 
-    // prod-layout sink: bandWidth 30M over ~100 Mbp of positions must
+    // prod-layout sink: 30 Mbp bands over ~100 Mbp of positions must
     // yield the banded tree and read back every variant doc
     val dir = Files.createTempDirectory("cohort_scale_out").toFile
-    VcfPipeline.writePartitioned(
-      variants, dir.getPath + "/variants", bandWidth = 30000000L)
+    VcfPipeline.writePartitioned(variants, dir.getPath + "/variants")
     val back = spark.read.parquet(dir.getPath + "/variants")
     assert(back.count() == calledSites)
     val bands = new java.io.File(dir, "variants/chrom=1").listFiles()

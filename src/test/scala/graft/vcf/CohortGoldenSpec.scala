@@ -200,8 +200,7 @@ class CohortGoldenSpec extends AnyFunSuite {
     // UMD round trip: export sites, annotate the probe "Pathogenic" → "D",
     // re-ingest, left-join; every other site stays "".
     val dir = Files.createTempDirectory("umd").toFile
-    VcfPipeline.writePartitioned(
-      variants, dir.getPath + "/variants", bandWidth = 30000000L)
+    VcfPipeline.writePartitioned(variants, dir.getPath + "/variants")
     val annotated = new java.io.File(dir, "annotated.txt")
     Files.write(annotated.toPath,
       s"NB_LINES header to skip\n1\t$probePos\t$probeRef\t$probeAlt\tPathogenic\n".getBytes)
